@@ -18,16 +18,31 @@ import graft.sources.Tables
   */
 object Graft {
 
+  /** Most paths one file listing handles in the driver before Spark lists
+    * them through a distributed job instead (Spark's default is 32). Set
+    * above the ingest trigger cap of 100 files; see [[session]].
+    */
+  val ListingThreshold: Int = 256
+
   /** Session tuned for this engine's workloads. `shufflePartitions` should
     * track the executor-core budget (the driver harness uses 32); AQE then
     * coalesces/re-splits at runtime — skew joins and small partitions are
     * handled without manual tuning.
+    *
+    * File listing stays in the driver up to [[ListingThreshold]] paths. The
+    * streaming file source hands each trigger's file paths (≤100 under
+    * [[graft.streaming.IngestJob.run]]'s cap) to an `InMemoryFileIndex`;
+    * above the default threshold of 32 that index lists them through a
+    * Spark job with one task per path, whose scheduling costs over ten
+    * times the listing itself.
     */
   def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
     val s = SparkSession.builder()
       .master(master)
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        ListingThreshold.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")

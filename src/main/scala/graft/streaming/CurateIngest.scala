@@ -518,7 +518,8 @@ object CurateIngest {
           outDir.foreach { d =>
             try ProductStore.compactProduct(spark, d, upTo, fromExclusive = -1L)
             catch { case e: IllegalArgumentException =>
-              System.err.println(s"[curate] product fold skipped: ${e.getMessage}")
+              org.slf4j.LoggerFactory.getLogger(getClass).warn(
+                s"product fold skipped: ${e.getMessage}")
             }
           }
         }

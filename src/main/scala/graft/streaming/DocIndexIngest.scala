@@ -365,8 +365,10 @@ object DocIndexIngest {
         bm25PostingsDir(root), bm25StatsDir(root), posPostingsDir(root),
         GraphIngest.degreesDir(root), GraphIngest.remapDir(root))
       .foreach(StoreCompaction.heal(spark, _))
-    currentEpoch(spark, root)
-      .foreach(e => StoreCompaction.heal(spark, prefixDir(root, e)))
+    // resolved once per trigger: nothing below writes an epoch marker
+    // before the bootstrap stage, whose need this same value decides
+    val stored = currentEpoch(spark, root)
+    stored.foreach(e => StoreCompaction.heal(spark, prefixDir(root, e)))
     writeOrCheckConfig(spark, root, cfg)
     // one materialization: the batch feeds the probe, three index
     // appends, and the corpus append. Gated: CurateIngest hands in its
@@ -374,33 +376,30 @@ object DocIndexIngest {
     val b = IngestStages.materialize(batch)
 
     // ── bootstrap: freeze the epoch-0 dictionary from the first batch ──
-    if (currentEpoch(spark, root).isEmpty) {
-      if (b.isEmpty) {
-        // nothing to index AND nothing to freeze the dictionary from: an
-        // empty epoch-0 dictionary would rank every shingle at df=0 for
-        // the store's whole life (exactness holds — the order is df-
-        // agnostic-correct — but the prefix-filter selectivity heuristic
-        // is silently lost until a manual refreshDictionary). Realistic
-        // via CurateIngest: a first batch whose rows all fail the
-        // lang/quality filters hands in an empty survivor set. Defer the
-        // bootstrap to the first nonempty batch; this trigger has no
-        // pairs and writes nothing.
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"doc-index store at $root not bootstrapped: empty batch; " +
-            "epoch-0 df dictionary deferred to the first nonempty batch")
-        val idT = b.schema(idCol).dataType
-        return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id_a", idT),
-            org.apache.spark.sql.types.StructField("id_b", idT),
-            org.apache.spark.sql.types.StructField("jacc_pct",
-              org.apache.spark.sql.types.LongType))))
-      }
-      ()
+    if (stored.isEmpty && b.isEmpty) {
+      // nothing to index AND nothing to freeze the dictionary from: an
+      // empty epoch-0 dictionary would rank every shingle at df=0 for
+      // the store's whole life (exactness holds — the order is df-
+      // agnostic-correct — but the prefix-filter selectivity heuristic
+      // is silently lost until a manual refreshDictionary). Realistic
+      // via CurateIngest: a first batch whose rows all fail the
+      // lang/quality filters hands in an empty survivor set. Defer the
+      // bootstrap to the first nonempty batch; this trigger has no
+      // pairs and writes nothing.
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"doc-index store at $root not bootstrapped: empty batch; " +
+          "epoch-0 df dictionary deferred to the first nonempty batch")
+      val idT = b.schema(idCol).dataType
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField("id_a", idT),
+          org.apache.spark.sql.types.StructField("id_b", idT),
+          org.apache.spark.sql.types.StructField("jacc_pct",
+            org.apache.spark.sql.types.LongType))))
     }
     val bootstrapStage: Option[(String, () => Unit)] =
-      if (currentEpoch(spark, root).isEmpty)
+      if (stored.isEmpty)
         // deterministic content (md5-derived) ⇒ a replayed bootstrap
         // rewrites identical bytes; plain overwrite is idempotent here
         Some("docidx:df_bootstrap" -> (() => {

@@ -41,14 +41,20 @@ import org.apache.spark.sql.types._
   * giving partition pruning on time-ranged queries.
   *
   * Scale shape of a micro-batch (the reference's keyed UPDATE replayed
-  * without an index): the LOCATE scan reads only the `transaction_id`/`dt`
-  * columns of the store with the batch's ≤`maxFilesPerTrigger` keys pushed
-  * down as a parquet IN-filter (row-group stats / bloom skip almost
-  * everything), and the REWRITE touches only the `dt` partitions that
-  * contain those keys — O(affected partitions) written per trigger, not
-  * O(store). At warehouse scale the same batch plan lands on a
-  * Delta/Iceberg MERGE or a store bucketed by `transaction_id`, which
-  * turns the locate scan into a bucket lookup.
+  * without an index): the batch's ≤`maxFilesPerTrigger` keys are deduped
+  * in the driver and pushed down as a parquet IN-filter on the store (row-
+  * group stats skip almost everything). ONE aggregation merges the located
+  * rows with the batch and keeps each key's old `dt`, so it yields both the
+  * merged rows and every affected partition; the REWRITE touches only those
+  * `dt` partitions — O(affected partitions) written per trigger, not
+  * O(store). At micro-batch size the trigger's cost is its fixed jobs, not
+  * its data: a trigger runs at most five (the batch read with the key
+  * collect, the dead-letter write when the batch has dead letters, the
+  * merge's shuffle stage and its collect, the rewrite), and the file source
+  * lists the trigger's files in the driver ([[graft.Graft.session]]). At
+  * warehouse scale the same batch plan lands on a Delta/Iceberg MERGE or a
+  * store bucketed by `transaction_id`, which turns the locate scan into a
+  * bucket lookup.
   */
 object IngestJob {
 
@@ -149,23 +155,33 @@ object IngestJob {
           .map(col).toIndexedSeq: _*))).as("payload"))
 
   /** Set-based merge of any mix of store rows / request rows / response
-    * rows: one hash aggregation on the key; null-skipping `max` picks the
+    * rows: one aggregation on the key; null-skipping `max` picks the
     * populated value per field. Insert, update-join, AND the out-of-order
     * case fall out of the same plan (the reference needs three code paths:
     * `processQueue.ts:162-198` insert, `:199-244` update, drop-on-miss).
+    *
+    * When `store` carries its `dt` partition column, the result also has
+    * `old_dt_min`/`old_dt_max`: the lowest and highest partition the key
+    * was located in, null for a key new to the store. A key sits in one
+    * partition, or in two after a crash mid-swap (its dated partition
+    * promoted, `dt=pending` not yet rotated), so the pair names them all.
+    * `min`/`max` leave the aggregate's operator as it is; a `collect_set`
+    * would switch it to `ObjectHashAggregate`, which falls back to sorting
+    * above 128 keys per task.
     */
-  def merge(store: DataFrame, records: DataFrame): DataFrame =
-    store.unionByName(records)
+  def merge(store: DataFrame, records: DataFrame): DataFrame = {
+    val located = store.columns.contains("dt")
+    val oldDt =
+      if (located) Seq(min("dt").as("old_dt_min"), max("dt").as("old_dt_max"))
+      else Nil
+    val aggs = storeSchema.fieldNames.toSeq.filter(_ != "transaction_id")
+      .map(f => max(f).as(f)) ++ oldDt
+    store.unionByName(
+        if (located) records.withColumn("dt", lit(null).cast(StringType))
+        else records)
       .groupBy(col("transaction_id"))
-      .agg(
-        max("app_id").as("app_id"),
-        max("endpoint").as("endpoint"),
-        max("workflow_id").as("workflow_id"),
-        max("action").as("action"),
-        max("status_code").as("status_code"),
-        max("timestamp").as("timestamp"),
-        max("request_s3_key").as("request_s3_key"),
-        max("response_s3_key").as("response_s3_key"))
+      .agg(aggs.head, aggs.tail: _*)
+  }
 
   private def fileSystem(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -268,47 +284,55 @@ object IngestJob {
   /** One micro-batch = the Lambda body (`processQueue.ts:22-80`), scoped to
     * the partitions the batch actually touches:
     *
-    *  1. LOCATE — scan the store for the batch's keys (driver-collected:
-    *     bounded by `maxFilesPerTrigger`, the Lambda's batch cap) with the
-    *     IN-list pushed down to parquet; only `transaction_id` + `dt`
-    *     survive column pruning.
-    *  2. MERGE — union the hit rows with the batch records, one hash
-    *     aggregation on the key.
-    *  3. REWRITE — affected partitions = old locations of the keys ∪ new
-    *     `dt`s of the merged rows; untouched keys of those partitions are
-    *     carried over, everything lands in `<store>.tmp`, and
-    *     [[swapPartitions]] promotes. Partitions without a batch key are
-    *     never read beyond the locate scan, never written.
+    *  1. KEYS — the batch's keys, collected and deduped in the driver
+    *     (bounded by `maxFilesPerTrigger`, the Lambda's batch cap).
+    *  2. LOCATE + MERGE — one pass: the store scan with the key IN-list
+    *     pushed down to parquet, unioned with the batch records, one
+    *     aggregation on the key ([[merge]]). Each merged row carries its
+    *     new `dt` and the old `dt`s it was located in; the merged rows are
+    *     collected (one per key), so they name every affected partition.
+    *  3. REWRITE — untouched keys of the affected partitions are carried
+    *     over, everything lands in `<store>.tmp`, and [[swapPartitions]]
+    *     promotes. Partitions without a batch key are never read beyond the
+    *     locate scan, never written.
+    *
+    * Four Spark jobs: the key collect, the merge's shuffle stage, the
+    * merged rows' collect, and the rewrite.
     */
   def processBatch(spark: SparkSession, batch: DataFrame, storeDir: String): Unit = {
     val records = toRecords(batch)
-    val keys: Seq[String] = records.select("transaction_id")
-      .filter(col("transaction_id").isNotNull).distinct()
-      .collect().map(_.getString(0)).toIndexedSeq
+    mergeBatch(spark, records,
+      records.select("transaction_id").collect().map(_.getString(0))
+        .distinct.toIndexedSeq,
+      storeDir)
+  }
+
+  /** Steps 2-3 of [[processBatch]] for `records` whose distinct keys are
+    * `keys`.
+    */
+  private def mergeBatch(
+      spark: SparkSession, records: DataFrame, keys: Seq[String],
+      storeDir: String): Unit = {
     if (keys.isEmpty) return
     val store = readStoreWithDt(spark, storeDir)
-    // hit and merged are tiny (bounded by the batch's key count) — persist
-    // so the locate scan runs once, not once per collect below
-    val hit = store.filter(col("transaction_id").isInCollection(keys)).persist()
-    val merged = merge(hit.drop("dt"), records)
+    val merged = merge(store.filter(col("transaction_id").isInCollection(keys)), records)
       .withColumn("dt",
         coalesce(date_format(col("timestamp"), "yyyy-MM-dd"), lit(PendingDt)))
-      .persist()
-    try {
-      val parts: Seq[String] =
-        (hit.select("dt").distinct().collect().map(_.getString(0)) ++
-          merged.select("dt").distinct().collect().map(_.getString(0)))
-          .distinct.toIndexedSeq
-      val survivors = store
-        .filter(col("dt").isInCollection(parts) &&
-          !col("transaction_id").isInCollection(keys))
-      survivors.unionByName(merged)
-        .write.mode("overwrite").partitionBy("dt").parquet(storeDir + ".tmp")
-      swapPartitions(fileSystem(spark, storeDir), storeDir, parts)
-    } finally {
-      hit.unpersist()
-      merged.unpersist()
-    }
+    // one row per key, and the driver holds the keys already: collected,
+    // the merged rows name every affected partition (old dts are null for
+    // keys new to the store) and feed the rewrite without a second run
+    val rows = merged.collect()
+    val parts: Seq[String] = rows
+      .flatMap(r => Seq("dt", "old_dt_min", "old_dt_max").map(r.getAs[String]))
+      .filter(_ != null).distinct.toIndexedSeq
+    val survivors = store
+      .filter(col("dt").isInCollection(parts) &&
+        !col("transaction_id").isInCollection(keys))
+    survivors.unionByName(
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), merged.schema)
+          .drop("old_dt_min", "old_dt_max"))
+      .write.mode("overwrite").partitionBy("dt").parquet(storeDir + ".tmp")
+    swapPartitions(fileSystem(spark, storeDir), storeDir, parts)
   }
 
   /** Compact the store's partitions: every long-running micro-batch sink
@@ -400,19 +424,23 @@ object IngestJob {
         // observed counters once per action, over-reporting every metric
         val b = batch.persist()
         try {
-          val dead = toDeadLetters(b)
+          // one job reads the batch and yields both the store keys and
+          // whether anything must be quarantined
+          val (dead, live) = b.select(col("transactionId"), deadCond(b))
+            .collect().partition(_.getBoolean(1))
           // keyed by epoch + dynamic partition overwrite: a replayed epoch
           // (crash after the DLQ write but before the checkpoint commit)
           // rewrites ITS partition instead of appending duplicates — the
           // quarantine gets the same exactly-once-per-epoch semantics as
           // the store swap
-          if (!dead.isEmpty)
-            dead.withColumn("batch_id", lit(epochId))
+          if (dead.nonEmpty)
+            toDeadLetters(b).withColumn("batch_id", lit(epochId))
               .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")
               .partitionBy("batch_id")
               .parquet(dlqDir)
-          processBatch(spark, b, storeDir)
+          mergeBatch(spark, toRecords(b),
+            live.map(_.getString(0)).distinct.toIndexedSeq, storeDir)
           Option(invalidate).foreach(_.invalidateAll())
           Option(invalidateBlobs).foreach(_.invalidateAll())
         } finally b.unpersist()

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import scala.util.control.NonFatal
 import graft.operators.Curation
 
 /** The UNIFIED ingest loop — ONE streaming query, ONE checkpoint, ONE
@@ -445,7 +446,8 @@ object PipelineIngest {
           outDir.foreach { d =>
             try ProductStore.compactProduct(spark, d, upTo, fromExclusive = -1L)
             catch { case e: IllegalArgumentException =>
-              System.err.println(s"[pipeline] product fold skipped: ${e.getMessage}")
+              org.slf4j.LoggerFactory.getLogger(getClass).warn(
+                s"product fold skipped: ${e.getMessage}")
             }
           }
         }
@@ -463,8 +465,9 @@ object PipelineIngest {
           for (d <- outDir; c <- invalidate)
             try searchCurated(spark, d, Map.empty, idCol, limit = 100,
               cache = Some(c))
-            catch { case e: Throwable =>
-              System.err.println(s"[pipeline] cache warm skipped: ${e.getMessage}")
+            catch { case NonFatal(e) =>
+              org.slf4j.LoggerFactory.getLogger(getClass).warn(
+                s"cache warm skipped: ${e.getMessage}")
             }
         ()
       }

@@ -261,4 +261,97 @@ class IngestJobSpec extends SparkTestBase {
     IngestJob.processBatch(spark, batch, store)
     assert(spark.read.parquet(store).count() === 1)
   }
+
+  test("a key left in two partitions by a crash mid-swap ends in one row, one partition") {
+    import org.apache.hadoop.fs.{FileUtil, Path => HPath}
+    import org.apache.spark.sql.functions.lit
+    def batchOf(json: String, name: String) =
+      spark.read.schema(IngestJob.rawSchema)
+        .json(spark.createDataset(Seq(json))(org.apache.spark.sql.Encoders.STRING))
+        .withColumn("srcKey", lit(name))
+    val store = tmpDir("graft-twoparts").resolve("audit").toString
+    val saved = tmpDir("graft-twoparts-saved").resolve("pending").toString
+    val fs = new HPath(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.hadoopConfiguration
+    IngestJob.processBatch(spark, batchOf(response("txn-x", 200), "x-response.json"), store)
+    FileUtil.copy(fs, new HPath(s"$store/dt=pending"), fs, new HPath(saved), false, conf)
+    // the request moves the key from dt=pending to its dated partition
+    val late = batchOf(request("txn-x", "2025-01-26T10:00:00Z"), "x-request.json")
+    IngestJob.processBatch(spark, late, store)
+    assert(!fs.exists(new HPath(s"$store/dt=pending")))
+    // crash window: the dated partition was promoted, dt=pending was never
+    // rotated away, and the checkpoint did not commit the batch
+    FileUtil.copy(fs, new HPath(saved), fs, new HPath(s"$store/dt=pending"), false, conf)
+    assert(spark.read.parquet(store).where("transaction_id = 'txn-x'")
+      .select("dt").distinct().count() === 2, "fixture must hold the key twice")
+
+    IngestJob.processBatch(spark, late, store)
+    val rows = spark.read.parquet(store).where("transaction_id = 'txn-x'").collect()
+    assert(rows.length === 1, "the replayed batch must leave the key in one row")
+    assert(rows.head.getAs[AnyRef]("dt").toString === "2025-01-26")
+    assert(rows.head.getAs[Integer]("status_code") === 200)
+    assert(rows.head.getAs[String]("endpoint") === "/api/users")
+    assert(!fs.exists(new HPath(s"$store/dt=pending")),
+      "the stale pending partition must have been rewritten away")
+  }
+
+  /** Descriptions of the jobs the body starts. The listener sees every job
+    * of the session, so the body's jobs are told apart by a local property,
+    * which a stream's thread inherits from the thread that starts it (a job
+    * group would not do: a stream sets its own).
+    */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val (prop, tag) = ("graft.test.jobFloor", s"floor-${System.nanoTime()}")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).filter(_.getProperty(prop) == tag)
+          .foreach(p => seen.add(String.valueOf(p.getProperty("spark.job.description"))))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setLocalProperty(prop, tag)
+      try body finally spark.sparkContext.setLocalProperty(prop, null)
+      // the listener bus is asynchronous: poll until the count is stable
+      val deadline = System.currentTimeMillis() + 10000
+      var last = -1
+      while (System.currentTimeMillis() < deadline && last != seen.size) {
+        last = seen.size; Thread.sleep(250)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    seen.toArray(Array.empty[String]).toSeq
+  }
+
+  test("an audit trigger keeps its job floor: 4 jobs per processBatch, no listing job") {
+    // 100 envelopes: the reference Lambda's batch cap (processQueue.ts:5)
+    val in = tmpDir("graft-floor-in")
+    for (i <- 0 until 50) {
+      writeJson(in, s"t$i-request.json", request(s"txn-$i", "2025-01-26T10:00:00Z"))
+      writeJson(in, s"t$i-response.json", response(s"txn-$i", 200))
+    }
+    val batch = spark.read.schema(IngestJob.rawSchema).json(in.toString)
+      .withColumn("srcKey", org.apache.spark.sql.functions.col("_metadata.file_path"))
+    val store = tmpDir("graft-floor-store").resolve("audit").toString
+    IngestJob.processBatch(spark, batch.limit(10), store)
+    val batchJobs = jobsOf(IngestJob.processBatch(spark, batch, store))
+    assert(batchJobs.size <= 4, s"processBatch ran ${batchJobs.size} jobs: $batchJobs")
+    assert(spark.read.parquet(store).count() === 50)
+
+    // one 100-file AvailableNow trigger under the session's listing threshold
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, Graft.ListingThreshold.toString)
+    try {
+      val streamStore = tmpDir("graft-floor-stream").resolve("audit").toString
+      val triggerJobs = jobsOf(IngestJob.run(spark, in.toString, streamStore,
+        tmpDir("graft-floor-cp").toString).awaitTermination())
+      assert(triggerJobs.nonEmpty, "the trigger's jobs must carry the caller's property")
+      assert(!triggerJobs.exists(_.contains("Listing leaf files")),
+        s"the trigger listed its files through a Spark job: $triggerJobs")
+      assert(spark.read.parquet(streamStore).count() === 50)
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
